@@ -542,88 +542,6 @@ object Bench {
     }
   }
 
-  /** Both halves CONCURRENTLY on disjoint cpusets (low on 0..3, high on
-    * 4..19 of this 32-vCPU box; parent gauges land on the free 20..31).
-    *
-    * Why concurrent: this host's dominant interference mode is
-    * hypervisor wall-clock dilation of the whole VM with no guest-side
-    * steal accounting (observed: guest 99.5% idle while a single-thread
-    * spin reads 6x and child TaskMetrics CPU 4-11x — the guest charges
-    * preempted-but-runnable time as thread CPU). Storms arrive every few
-    * minutes, so a SEQUENTIAL pair (50-150 s of exposure) almost always
-    * straddles one, and whichever half drew the storm loses — five
-    * rounds of artifacts show the high half eating it. Running the two
-    * halves in the same wall window makes global dilation hit both
-    * equally, so it cancels in the efficiency RATIO by construction.
-    *
-    * Honesty: two independent jobs at different parallelism on disjoint
-    * CPU sets is exactly the two-cluster-sizes comparison; the only
-    * cross-talk is shared memory bandwidth, which depresses the WIDE
-    * half (it competes with the narrow job while its own per-core share
-    * is smaller), i.e. the measured efficiency is a lower bound on the
-    * isolated number.
-    *
-    * Returns ((tpLow, cpuLow), (tpHigh, cpuHigh)); a killed/failed half
-    * reads (0,0). The high child is additionally killed once the low
-    * half has finished and 1.2x the low wall has passed — a wide half
-    * still running then is at eff <= 0.21, junk worth no more wall. */
-  private def runPair(coresLow: Int, coresHigh: Int, nDocs: Int,
-                      corpusDir: String, corpusDocs: Int,
-                      maxSec: Double): ((Double, Double), (Double, Double)) = {
-    // low at the bottom of the CPU range, high at the TOP: a 3-rep
-    // placement probe (tools/cpuset_probe.sh) read the upper range
-    // never-worse under this box's storms (one rep 9.7k vs 22.9k
-    // docs/s, one rep equal-stormy, one rep equal-quiet); the parent's
-    // unpinned gauges land on the free middle
-    val nProc = Runtime.getRuntime.availableProcessors
-    val lowSet = s"0-${coresLow - 1}"
-    val highStart = math.max(coresLow, nProc - coresHigh)
-    val highSet = s"$highStart-${highStart + coresHigh - 1}"
-    val cl = spawnHalf(coresLow, lowSet, nDocs, corpusDir, corpusDocs)
-    val ch = spawnHalf(coresHigh, highSet, nDocs, corpusDir, corpusDocs)
-    if (cl.isEmpty || ch.isEmpty) {
-      cl.foreach(c => { c.p.destroyForcibly(); c.p.waitFor() })
-      ch.foreach(c => { c.p.destroyForcibly(); c.p.waitFor() })
-      stampErr("pair spawn failed (no taskset?); falling back to " +
-               "sequential in-JVM halves")
-      cpuGaugeAvailable = false
-      val l = buildThroughput(coresLow, nDocs, corpusDir, corpusDocs, maxSec)
-      val h = buildThroughput(coresHigh, nDocs, corpusDir, corpusDocs, maxSec)
-      return ((l, 0.0), (h, 0.0))
-    }
-    val (low, high) = (cl.get, ch.get)
-    val t0 = System.nanoTime()
-    def upMs: Long = (System.nanoTime() - t0) / 1000000L
-    val capMs = ((maxSec + 120.0) * 1000).toLong
-    var lowDoneMs = -1L
-    var lowKilled = false; var highKilled = false
-    var waiting = true
-    while (waiting) {
-      val lowAlive = low.p.isAlive; val highAlive = high.p.isAlive
-      if (lowDoneMs < 0 && !lowAlive) lowDoneMs = upMs
-      if (!lowAlive && !highAlive) waiting = false
-      else if (upMs > capMs) {
-        if (lowAlive) { low.p.destroyForcibly(); lowKilled = true }
-        if (highAlive) { high.p.destroyForcibly(); highKilled = true }
-        low.p.waitFor(); high.p.waitFor()
-        stampErr(f"pair killed at wall cap (${maxSec}%.0fs + 120s allowance)")
-        waiting = false
-      } else if (highAlive && lowDoneMs > 0 &&
-                 upMs > (lowDoneMs * 1.2).toLong + 10000) {
-        high.p.destroyForcibly(); high.p.waitFor(); highKilled = true
-        stampErr(f"high half killed at 1.2x the low wall " +
-                 f"(${lowDoneMs / 1000.0}%.0fs): eff would be <= 0.21")
-      } else {
-        // sleep on a process that is actually alive (waitFor on an
-        // exited one returns immediately — busy loop)
-        (if (lowAlive) low.p else high.p)
-          .waitFor(500, java.util.concurrent.TimeUnit.MILLISECONDS)
-        ()
-      }
-    }
-    (reapHalf(low, lowKilled), reapHalf(high, highKilled))
-  }
-
   private def stampErr(msg: String): Unit =
     System.err.println(s"[bench] $msg")
 
@@ -813,22 +731,12 @@ object Bench {
     val coresLow = sys.env.getOrElse("SPARK_GRAFT_SCALE_LOW", "1").toInt
     val coresHigh = sys.env.getOrElse("SPARK_GRAFT_SCALE_HIGH",
                                       (coresLow * 4).toString).toInt
-    // SEQUENTIAL pairs (default). The round-6 concurrent-pair variant
-    // (both halves in one wall window on disjoint cpusets, so whole-VM
-    // dilation cancels in the ratio) measured BIMODAL at full round
-    // size and can never evidence [0.8, 1.05]: quiet windows read eff
-    // ~1.05 (the 4-core half is depressed ~33% by the 16-core
-    // neighbour while the wide half loses only ~15% — on a 32-vCPU
-    // guest over ~16 physical cores, ANY 4+16 split must co-schedule
-    // sibling threads: 20 > 16), and storm windows read ~0.47 (the
-    // asymmetric dilation it was meant to cancel doesn't cancel).
-    // Isolated sequential halves have no cross-talk; storms are dodged
-    // by the pre-flight gate, the between-halves re-run, and the
-    // relative wall caps. SPARK_GRAFT_SCALE_PAIR=conc re-enables the
-    // concurrent variant for comparison runs.
-    val pairConcurrent =
-      sys.env.get("SPARK_GRAFT_SCALE_PAIR").contains("conc") &&
-      coresLow + coresHigh <= Runtime.getRuntime.availableProcessors
+    // The halves run SEQUENTIALLY. A concurrent-pair variant (both
+    // halves in one wall window on disjoint cpusets) measured bimodal,
+    // ~1.05 in quiet windows and ~0.47 in storms, never inside
+    // [0.8, 1.05]; isolated halves have no cross-talk, and storms are
+    // dodged by the pre-flight gate, the between-halves re-run and the
+    // relative wall caps.
     // Interleaved rounds, each round = one low-cores build immediately
     // followed by one high-cores build on the same prepped corpus. The
     // host shows minutes-long interference windows (identical 4-core
@@ -878,19 +786,8 @@ object Bench {
     // no correction is applied unless a gauge actually saw a
     // disturbance — a quiet round's eff_norm IS its raw eff
     def effNorm(r: RoundSample): Double = {
-      // Concurrent pairs need NO weather normalization — both halves
-      // share one wall window, so a global disturbance cancels in the
-      // raw ratio already, and "correcting" by the pre/post-round probe
-      // ratio would inflate a number that was never asymmetrically
-      // depressed (observed: raw 0.554 -> fake 0.906 via a post-probe
-      // that caught a storm tail). Sequential pairs keep the gauge
-      // correction: there the two halves really did run in different
-      // weather.
-      if (pairConcurrent) eff(r.l, r.h)
-      else {
-        val ratio = gaugeRatio(r)
-        eff(r.l, r.h) * (if (ratio >= 1.1) ratio else 1.0)
-      }
+      val ratio = gaugeRatio(r)
+      eff(r.l, r.h) * (if (ratio >= 1.1) ratio else 1.0)
     }
     def cpuRatio(r: RoundSample): Double =
       if (r.cpuL > 0 && r.cpuH > 0) r.cpuH / r.cpuL else -1.0
@@ -1135,61 +1032,6 @@ object Bench {
             stamp(f"scaling stint stopped post-wait: remaining " +
                   f"${deadline - elapsedSec}%.0fs too small for a round")
             continue = false
-          } else if (pairConcurrent) {
-            // ============== concurrent pair round ======================
-            val roundDocs = math.min(benchDocs,
-              math.min(byBudget2,
-                       math.max(benchDocs / 8, (tpSizeEst * sizeWallSec).toInt)))
-            val r0 = System.nanoTime()
-            val capSecP = buildCap()
-            val capL = pfCap
-            val lockL = pfLock
-            val ((lo, hi), spinP) = gauged(
-              runPair(coresLow, coresHigh, roundDocs, corpusDir, benchDocs,
-                      capSecP))
-            lastRoundSec = (System.nanoTime() - r0) / 1e9
-            val (l, cpuL) = lo
-            val (h, cpuH) = hi
-            // post-pair probes fill the high-side gauge columns: with the
-            // halves sharing one window, pre/post bracketing is what says
-            // whether a storm entered or left during the round
-            val capH = parCapacityWallMs(coresHigh)
-            val lockH = lockContentionWallMs(coresHigh)
-            if (capH < bestCap) bestCap = capH
-            if (lockH < bestLock) bestLock = lockH
-            tpLowPrev = tpLowEst
-            if (l <= 0 || h <= 0) {
-              stamp(f"scaling round ${round + 1}: pair aborted " +
-                    f"(tpLow=$l%.0f tpHigh=$h%.0f, cap ${capSecP}%.0fs)")
-              tpLowEst =
-                if (l > 0) math.min(tpLowEst, l)
-                else math.max(1.0, roundDocs / capSecP / 4)
-              // sizing shrinks by halving, not cratering: the abort was
-              // weather, and a 150k-doc floor round has a ~0.78 eff
-              // CEILING from fixed per-build cost — systematically
-              // undersized rounds can never evidence 0.8 even when quiet
-              tpSizeEst = math.max(tpSizeEst / 2, tpLowEst)
-            } else {
-              tpLowEst = math.min(l, h * coresLow / coresHigh)
-              // sizing tracks the BEST low-side rate seen: a stormy
-              // round's dilated l would shrink the next round under the
-              // overhead ceiling; budget safety is the caps' job
-              // (buildCap + the 1.2x-low high kill), not the sizer's
-              tpSizeEst = math.max(tpSizeEst, l)
-            }
-            val r = RoundSample(math.max(l, 0.0), math.max(h, 0.0), roundDocs,
-                                spinP, spinP, capL, capH,
-                                math.max(cpuL, 0.0), math.max(cpuH, 0.0),
-                                lockL, lockH)
-            rounds += r
-            round += 1
-            stamp(f"scaling round $round (pair): docs=$roundDocs " +
-                  f"tpLow=$l%.0f tpHigh=$h%.0f spin=${spinP}%.1fms " +
-                  f"cap=${capL}%.0f/${capH}%.0fms " +
-                  f"lock=${lockL}%.0f/${lockH}%.0fms " +
-                  f"cpu=${cpuL}%.0f/${cpuH}%.0fs " +
-                  f"eff=${eff(l, h)}%.3f quiet=${quietRound(r)} " +
-                  f"best=${bestRoundEff}%.3f bestEv=${bestEvidence}%.3f")
           } else {
             val roundDocs = math.min(benchDocs,
               math.min(byBudget2,
@@ -1471,8 +1313,7 @@ object Bench {
     val buildJson =
       s"""{"bench_docs":$benchDocs,"cores_low":$coresLow,"cores_high":$coresHigh,""" +
       s""""docs_per_sec_low":${jnum(tpLow)},"docs_per_sec_high":${jnum(tpHigh)},""" +
-      s""""isolation":"${if (pairConcurrent) "cpuset-concurrent-pair"
-                         else "cpuset-sequential"}",""" +
+      s""""isolation":"cpuset-sequential",""" +
       s""""warmup_docs_per_sec":${jnum(warm)},"scaling_rounds":$round,""" +
       s""""rounds":$roundsJson,"scaling_efficiency":${jnum(efficiency)},""" +
       s""""scaling_efficiency_normalized":${jnum(efficiencyNorm)},""" +

@@ -1,7 +1,10 @@
 package graft.build
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core._
 import graft.ingest._
 
@@ -30,22 +33,44 @@ final case class IndexMeta(numDocs: Long, avgLen: Float, shardSize: Long,
 
 /** In-memory handle on a built index (datasets remain distributed).
   *
-  * `release` frees the build-internal persisted datasets (the
-  * tokens-sized term-ranged layout, the dictionary cache, and the
-  * corpus cache when the builder created it). Callers that build
-  * one-shot indexes in a long-lived session MUST invoke it once they
-  * have forced everything they need from `segments`/`norms`/`dict` —
-  * otherwise each build pins a corpus-token-sized cache for the
-  * session lifetime and starves later jobs of execution memory
-  * (observed as a 16-core build spilling where a 4-core one did not).
-  * After release, re-consuming the datasets recomputes from source.
-  * Indexes loaded from disk or derived (merge/hybrid) default to a
-  * no-op. */
+  * `serving` is the query-time layout, built by one cogroup on the first
+  * query: partition i holds docID shard i's termId -> Segment map and
+  * norm array, so a query batch is one narrow pass over it.
+  *
+  * `release` frees that layout and the build-internal caches
+  * (`releaseBuild`: the tokens-sized term-ranged layout, the dictionary
+  * and the corpus when the builder cached it; a no-op for indexes loaded
+  * from disk or derived by merge/hybrid). Callers that build one-shot
+  * indexes in a long-lived session MUST invoke it once they have forced
+  * everything they need — otherwise each build pins a corpus-token-sized
+  * cache for the session lifetime and starves later jobs of execution
+  * memory (observed as a 16-core build spilling where a 4-core one did
+  * not). After release, re-consuming the datasets recomputes from source. */
 final case class BuiltIndex(meta: IndexMeta,
                             dict: Dataset[DictEntry],
                             segments: Dataset[Segment],
                             norms: Dataset[ShardNorms],
-                            release: () => Unit = () => ())
+                            releaseBuild: () => Unit = () => ()) {
+  private var layout: RDD[(Int, (Map[Int, Segment], Array[Float]))] = _
+
+  def serving: RDD[(Int, (Map[Int, Segment], Array[Float]))] = synchronized {
+    if (layout == null) {
+      val numShards = ((meta.numDocs + meta.shardSize - 1) / meta.shardSize).toInt
+      layout = segments.rdd.keyBy(_.shard)
+        .cogroup(norms.rdd.keyBy(_.shard), new HashPartitioner(numShards))
+        .mapValues { case (segs, ns) =>
+          (segs.map(s => s.termId -> s).toMap, ns.headOption.fold(Array.empty[Float])(_.norms))
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    layout
+  }
+
+  def release(): Unit = {
+    synchronized { if (layout != null) layout.unpersist(blocking = false) }
+    releaseBuild()
+  }
+}
 
 object IndexBuilder {
 
@@ -314,7 +339,7 @@ object IndexBuilder {
     BuiltIndex(IndexMeta(numDocs, avgLen, shardSize, indexType, numTerms,
                          numPostings),
                dict, segments, norms,
-               release = () => {
+               releaseBuild = () => {
                  if (byTerm != null) byTerm.unpersist(blocking = false)
                  // unpersist (not destroy): keeps the driver copy so a
                  // post-release re-consumption can still recompute;

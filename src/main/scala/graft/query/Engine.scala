@@ -1,7 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core._
 import graft.build._
 import graft.ingest.DictEntry
@@ -13,16 +12,18 @@ final case class Query(queryId: Int, terms: Array[String])
 final case class RankedHit(queryId: Int, rank: Int, docId: Long, score: Float)
 final case class CountResult(queryId: Int, matches: Long)
 
-/** Distributed query serving: queries are broadcast; each docID shard
-  * runs the DAAT kernel over its segments (partition pruning on termId
-  * keeps untouched lists unread); per-shard top-ks merge into a global
-  * top-k ordered (score desc, docId asc). For a single shard this is
-  * exactly the reference's single-node execution.
+/** Distributed query serving: each batch is one narrow pass over the
+  * index's shard-resident layout ([[BuiltIndex.serving]]) — every docID
+  * shard runs the DAAT kernel over its in-memory segments, and the driver
+  * merges the per-shard top-ks into a global top-k ordered (score desc,
+  * docId asc). For a single shard this is exactly the reference's
+  * single-node execution.
   */
 object Engine {
 
-  final val Ops = Seq("and", "or", "ranked_and", "ranked_or", "wand",
-                      "maxscore", "block_max_wand")
+  final val RankedOps = Set("ranked_and", "ranked_or", "wand", "maxscore",
+                            "block_max_wand")
+  final val CountOps = Set("and", "or")
 
   /** Resolve term strings -> (termId, df) for the query terms only (tiny
     * collect; the full dictionary never reaches the driver). */
@@ -104,43 +105,39 @@ object Engine {
     }
   }
 
-  /** Ranked top-k (op in ranked_and/ranked_or/wand/maxscore/block_max_wand). */
+  /** Ranked top-k (op in RankedOps). */
   def topK(spark: SparkSession, index: BuiltIndex, queries: Seq[Query],
            op: String, k: Int = 10,
            scorer: Scorer = Bm25): Dataset[RankedHit] = {
     import spark.implicits._
-    val rows = shardResults(spark, index, queries, op, k, scorer)
+    require(RankedOps(op), s"topK serves ${RankedOps.mkString("/")}, not $op")
+    require(op != "block_max_wand" || IndexBuilder.BlockFamilies(index.meta.indexType),
+            s"block_max_wand requires a block index, not ${index.meta.indexType}")
     // global merge: top-k per query by (score desc, docId asc)
-    rows.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      val all = it.toArray.sortBy { case (_, d, s, _) => (-s, d) }
-      all.take(k).iterator.zipWithIndex.map { case ((_, d, s, _), r) =>
-        RankedHit(qid, r + 1, d, s)
+    val hits = shardResults(spark, index, queries, op, k, scorer).groupBy(_._1)
+      .toSeq.flatMap { case (qid, rows) =>
+        rows.sortBy { case (_, d, s, _) => (-s, d) }.take(k).zipWithIndex
+          .map { case ((_, d, s, _), r) => RankedHit(qid, r + 1, d, s) }
       }
-    }
+    spark.createDataset(hits)
   }
 
-  /** Boolean counts (op in and/or). */
+  /** Boolean counts (op in CountOps); queries no shard touched count 0. */
   def count(spark: SparkSession, index: BuiltIndex, queries: Seq[Query],
             op: String): Dataset[CountResult] = {
     import spark.implicits._
-    val rows = shardResults(spark, index, queries, op, 0, Bm25)
-    // one distributed pass; the per-query counts are tiny (one row per
-    // query), so the zero-fill for queries no shard touched happens
-    // driver-side instead of a second evaluation of the shard cogroup
-    val got = rows.groupByKey(_._1).mapGroups { (qid, it) =>
-      CountResult(qid, it.map(_._4).sum)
-    }.collect()
-    val gotIds = got.map(_.queryId).toSet
-    val all = got.toSeq ++
-      queries.map(_.queryId).filterNot(gotIds).map(CountResult(_, 0L))
-    spark.createDataset(all)
+    require(CountOps(op), s"count serves ${CountOps.mkString("/")}, not $op")
+    val got = shardResults(spark, index, queries, op, 0, Bm25)
+      .groupMapReduce(_._1)(_._4)(_ + _)
+    spark.createDataset(queries.map(_.queryId).distinct
+      .map(qid => CountResult(qid, got.getOrElse(qid, 0L))))
   }
 
+  /** Runs the batch on every shard of the serving layout in one job and
+    * collects the (queryId, docId, score, matches) rows. */
   private def shardResults(spark: SparkSession, index: BuiltIndex,
                            queries: Seq[Query], op: String, k: Int,
-                           scorer: Scorer)
-      : Dataset[(Int, Long, Float, Long)] = {
-    import spark.implicits._
+                           scorer: Scorer): Array[(Int, Long, Float, Long)] = {
     val termInfo = resolveTerms(spark, index.dict, queries)
     val resolved: Array[(Int, Array[(Int, Int, Long)], Boolean)] = queries.map { q =>
       // query_freqs: termId-sorted (termId, qtf, df)
@@ -150,29 +147,9 @@ object Engine {
       val unknown = q.terms.exists(t => !termInfo.contains(t))
       (q.queryId, qts, unknown)
     }.toArray
-    val neededTerms = resolved.flatMap(_._2.map(_._1)).distinct.toSet
-    val bcQueries = spark.sparkContext.broadcast(resolved)
-    val bcMeta = spark.sparkContext.broadcast(index.meta)
-    val opL = op
-    val kL = k
-    val scorerL = scorer
-
-    // Column predicate (not a typed lambda) so the filter pushes down to
-    // the parquet scan / cached-batch pruning instead of deserializing
-    // every segment row
-    val filteredSegs = index.segments
-      .filter(org.apache.spark.sql.functions.col("termId")
-        .isin(neededTerms.toSeq: _*))
-    filteredSegs.groupByKey(_.shard)
-      .cogroup(index.norms.groupByKey(_.shard)) { (shard, segIt, normIt) =>
-        val norms = normIt.toSeq.headOption.map(_.norms).getOrElse(Array.empty)
-        if (norms.isEmpty) Iterator.empty
-        else {
-          val segs = segIt.map(s => s.termId -> s).toMap
-          if (segs.isEmpty) Iterator.empty
-          else runShard(opL, scorerL, bcMeta.value, kL, bcQueries.value,
-                        segs, norms, shard)
-        }
-      }
+    val meta = index.meta
+    index.serving.flatMap { case (shard, (segs, norms)) =>
+      runShard(op, scorer, meta, k, resolved, segs, norms, shard)
+    }.collect()
   }
 }

@@ -124,20 +124,6 @@ object Profile {
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = sys.env.getOrElse("PROF_SF", "/root/testdata/sf0.01")
 
-    if (what == "explain") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-explain").toString
-      val corpus = Corpus.fromDocumentsTable(spark, "/root/testdata/sf0.001")
-      val docs = DocIds.assign(spark, corpus, 4)
-      val idx = graft.build.IndexStore.buildResumable(
-        spark, docs, "block_optpfor", 1L << 20, dir, 4)
-      val q = Seq(graft.query.Query(0, Array("join", "hash")))
-      val plan = graft.query.Engine.topK(spark, idx, q, "wand", 10)
-      plan.explain("formatted")
-      plan.collect().foreach(h => println(s"[prof] hit $h"))
-      spark.stop()
-      return
-    }
-
     if (what == "all" || what == "sql") {
       import spark.implicits._
       val qdf = graft.SparkEntry.FixedQueries

@@ -1,5 +1,8 @@
 package graft.spark
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -134,6 +137,59 @@ class EngineSpec extends AnyFunSuite {
       val b = Engine.topK(spark, pef, queries, op, 10).collect()
         .sortBy(h => (h.queryId, h.rank)).map(h => (h.queryId, h.docId, h.score)).toSeq
       assert(a == b, s"op=$op")
+    }
+  }
+
+  test("a repeated batch is one narrow pass: no shuffle, at most 2 jobs") {
+    val idx = buildIdx("block_optpfor", 64) // ~8 shards at 500 docs
+    // jobs and shuffle-write bytes that Spark ran for one call
+    def traced(call: => Any): (Int, Long) = {
+      val sc = spark.sparkContext
+      val jobs = new AtomicInteger
+      val shuffleBytes = new AtomicLong
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m =>
+            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+      TestListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try { call; TestListenerBus.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      (jobs.get, shuffleBytes.get)
+    }
+    def topK() = Engine.topK(spark, idx, queries, "wand", 10).collect().toSet
+    def count() = Engine.count(spark, idx, queries, "and").collect().toSet
+    // the first calls build the serving layout; the repeats only read it
+    val (hits, counts) = (topK(), count())
+    for ((name, repeat) <- Seq("topK" -> (() => assert(topK() == hits)),
+                               "count" -> (() => assert(count() == counts)))) {
+      val (jobs, shuffleBytes) = traced(repeat())
+      assert(shuffleBytes == 0L, s"$name wrote $shuffleBytes shuffle bytes")
+      assert(jobs <= 2, s"$name ran $jobs jobs")
+    }
+  }
+
+  private lazy val blockIdx = buildIdx("block_optpfor", 1L << 20)
+
+  test("topK rejects a boolean op") {
+    intercept[IllegalArgumentException] {
+      Engine.topK(spark, blockIdx, queries, "and", 10).collect()
+    }
+  }
+
+  test("count rejects a ranked op") {
+    intercept[IllegalArgumentException] {
+      Engine.count(spark, blockIdx, queries, "wand").collect()
+    }
+  }
+
+  test("block_max_wand rejects an EF index") {
+    val pef = buildIdx("opt", 1L << 20)
+    intercept[IllegalArgumentException] {
+      Engine.topK(spark, pef, Seq(Query(0, Array("nonexistentterm"))),
+                  "block_max_wand", 10).collect()
     }
   }
 }
