@@ -33,9 +33,11 @@ final case class IndexMeta(numDocs: Long, avgLen: Float, shardSize: Long,
 
 /** In-memory handle on a built index (datasets remain distributed).
   *
-  * `serving` is the query-time layout, built by one cogroup on the first
-  * query: partition i holds docID shard i's termId -> Segment map and
-  * norm array, so a query batch is one narrow pass over it.
+  * `serving` is the query-time layout, built once on the first query by
+  * one `segments`/`dict` join on termId and one cogroup with `norms` by
+  * shard: partition i holds docID shard i's term -> (Segment, global df)
+  * map and norm array, so a query batch, term resolution included, is one
+  * narrow pass over it.
   *
   * `release` frees that layout and the build-internal caches
   * (`releaseBuild`: the tokens-sized term-ranged layout, the dictionary
@@ -51,15 +53,17 @@ final case class BuiltIndex(meta: IndexMeta,
                             segments: Dataset[Segment],
                             norms: Dataset[ShardNorms],
                             releaseBuild: () => Unit = () => ()) {
-  private var layout: RDD[(Int, (Map[Int, Segment], Array[Float]))] = _
+  private var layout: RDD[(Int, (Map[String, (Segment, Long)], Array[Float]))] = _
 
-  def serving: RDD[(Int, (Map[Int, Segment], Array[Float]))] = synchronized {
+  def serving: RDD[(Int, (Map[String, (Segment, Long)], Array[Float]))] = synchronized {
     if (layout == null) {
       val numShards = ((meta.numDocs + meta.shardSize - 1) / meta.shardSize).toInt
-      layout = segments.rdd.keyBy(_.shard)
+      layout = segments.rdd.keyBy(_.termId)
+        .join(dict.rdd.map(e => e.termId -> (e.term, e.df)))
+        .map { case (_, (s, (term, df))) => s.shard -> (term, (s, df)) }
         .cogroup(norms.rdd.keyBy(_.shard), new HashPartitioner(numShards))
         .mapValues { case (segs, ns) =>
-          (segs.map(s => s.termId -> s).toMap, ns.headOption.fold(Array.empty[Float])(_.norms))
+          (segs.toMap, ns.headOption.fold(Array.empty[Float])(_.norms))
         }
         .persist(StorageLevel.MEMORY_AND_DISK)
     }

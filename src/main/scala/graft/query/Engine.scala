@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core._
 import graft.build._
-import graft.ingest.DictEntry
 
 /** A query: id + term strings (duplicates allowed; folded into query-term
   * multiplicity exactly like queries.hpp:133-150). */
@@ -12,12 +11,13 @@ final case class Query(queryId: Int, terms: Array[String])
 final case class RankedHit(queryId: Int, rank: Int, docId: Long, score: Float)
 final case class CountResult(queryId: Int, matches: Long)
 
-/** Distributed query serving: each batch is one narrow pass over the
-  * index's shard-resident layout ([[BuiltIndex.serving]]) — every docID
-  * shard runs the DAAT kernel over its in-memory segments, and the driver
-  * merges the per-shard top-ks into a global top-k ordered (score desc,
-  * docId asc). For a single shard this is exactly the reference's
-  * single-node execution.
+/** Distributed query serving: each batch is one Spark job, a narrow pass
+  * over the index's shard-resident layout ([[BuiltIndex.serving]]) — every
+  * docID shard resolves the query terms against its own term map and runs
+  * the DAAT kernel over its in-memory segments, and the driver merges the
+  * per-shard top-ks into a global top-k ordered (score desc, docId asc).
+  * For a single shard this is exactly the reference's single-node
+  * execution.
   */
 object Engine {
 
@@ -25,22 +25,14 @@ object Engine {
                             "block_max_wand")
   final val CountOps = Set("and", "or")
 
-  /** Resolve term strings -> (termId, df) for the query terms only (tiny
-    * collect; the full dictionary never reaches the driver). */
-  private def resolveTerms(spark: SparkSession, dict: Dataset[DictEntry],
-                           queries: Seq[Query]): Map[String, (Int, Long)] = {
-    import spark.implicits._
-    val wanted = queries.flatMap(_.terms).distinct
-    dict.filter($"term".isin(wanted: _*))
-      .map(e => (e.term, (e.termId, e.df)))
-      .collect().toMap
-  }
-
-  /** Per-shard kernel run over the shard's (filtered) segments. */
+  /** Per-shard kernel run over the shard's term -> (Segment, global df)
+    * map. A query term the shard lacks, whether out of vocabulary or only
+    * absent from this shard, empties a conjunction here and drops out of a
+    * disjunction; since df is global, the merged results are the same as
+    * resolving against the whole dictionary. */
   private def runShard(op: String, scorer: Scorer, meta: IndexMeta,
-                       k: Int,
-                       queries: Array[(Int, Array[(Int, Int, Long)], Boolean)], // (qid, [(termId, qtf, df)], someTermUnknown)
-                       segs: Map[Int, Segment],
+                       k: Int, queries: Array[Query],
+                       segs: Map[String, (Segment, Long)],
                        norms: Array[Float],
                        shard: Int): Iterator[(Int, Long, Float, Long)] = {
     // returns (queryId, docIdGlobal, score, matches) rows; for boolean ops
@@ -51,24 +43,22 @@ object Engine {
     val codec = if (isBlock) IndexBuilder.codecFor(meta.indexType) else null
     val family = if (isBlock) null else EfFamily.byName(meta.indexType)
 
-    queries.iterator.flatMap { case (qid, qterms, unknownTerm) =>
-      val present = qterms.filter(t => segs.contains(t._1))
+    queries.iterator.flatMap { case Query(qid, qterms) =>
+      // query_freqs: termId-sorted (segment, qtf, df) of the terms held here
+      val qtfs = qterms.groupMapReduce(identity)(_ => 1)(_ + _)
+      val present = qtfs.toArray.flatMap { case (t, qtf) =>
+        segs.get(t).map { case (seg, df) => (seg, qtf, df) }
+      }.sortBy(_._1.termId)
       val conjunctive = op == "and" || op == "ranked_and"
-      if (present.isEmpty || (conjunctive && unknownTerm)) {
-        // a conjunction with an out-of-vocabulary term matches nothing
+      if (present.isEmpty || (conjunctive && present.length != qtfs.size)) {
         if (op == "and" || op == "or") Iterator.single((qid, -1L, 0.0f, 0L))
         else Iterator.empty
-      } else if (op == "and" && present.length != qterms.length) {
-        // a conjunction with a term absent from this shard matches nothing
-        Iterator.single((qid, -1L, 0.0f, 0L))
       } else {
-        def openEnum(termId: Int): PostingEnum =
+        def openEnum(seg: Segment): PostingEnum =
           if (isBlock)
-            new BlockPostingList.Enumerator(segs(termId).bytes, 0,
-                                            shardNumDocs, codec)
+            new BlockPostingList.Enumerator(seg.bytes, 0, shardNumDocs, codec)
           else
-            new EfPostingList.Enumerator(segs(termId).bytes, family,
-                                         shardNumDocs)
+            new EfPostingList.Enumerator(seg.bytes, family, shardNumDocs)
         op match {
           case "and" =>
             val enums = present.map(t => openEnum(t._1))
@@ -79,19 +69,16 @@ object Engine {
             Iterator.single((qid, -1L, 0.0f,
                              Daat.orCount(enums, shardNumDocs)))
           case _ =>
-            val lists = present.map { case (termId, qtf, df) =>
-              val en = openEnum(termId)
+            val lists = present.map { case (seg, qtf, df) =>
+              val en = openEnum(seg)
               val qw = scorer.queryTermWeight(qtf.toLong, df, meta.numDocs)
-              val seg = segs(termId)
               new Daat.ScoredList(en, qw, qw * seg.maxScore,
                                   if (isBlock) en.asInstanceOf[BlockPostingList.Enumerator] else null,
                                   seg.blockMaxScores)
             }
             val top = op match {
               case "ranked_or" => Daat.rankedOr(lists, norms, shardNumDocs, k, scorer)
-              case "ranked_and" =>
-                if (present.length != qterms.length) Array.empty[(Int, Float)]
-                else Daat.rankedAnd(lists, norms, shardNumDocs, k, scorer)
+              case "ranked_and" => Daat.rankedAnd(lists, norms, shardNumDocs, k, scorer)
               case "wand" => Daat.wand(lists, norms, shardNumDocs, k, scorer)
               case "maxscore" => Daat.maxscore(lists, norms, shardNumDocs, k, scorer)
               case "block_max_wand" =>
@@ -114,7 +101,7 @@ object Engine {
     require(op != "block_max_wand" || IndexBuilder.BlockFamilies(index.meta.indexType),
             s"block_max_wand requires a block index, not ${index.meta.indexType}")
     // global merge: top-k per query by (score desc, docId asc)
-    val hits = shardResults(spark, index, queries, op, k, scorer).groupBy(_._1)
+    val hits = shardResults(index, queries, op, k, scorer).groupBy(_._1)
       .toSeq.flatMap { case (qid, rows) =>
         rows.sortBy { case (_, d, s, _) => (-s, d) }.take(k).zipWithIndex
           .map { case ((_, d, s, _), r) => RankedHit(qid, r + 1, d, s) }
@@ -127,7 +114,7 @@ object Engine {
             op: String): Dataset[CountResult] = {
     import spark.implicits._
     require(CountOps(op), s"count serves ${CountOps.mkString("/")}, not $op")
-    val got = shardResults(spark, index, queries, op, 0, Bm25)
+    val got = shardResults(index, queries, op, 0, Bm25)
       .groupMapReduce(_._1)(_._4)(_ + _)
     spark.createDataset(queries.map(_.queryId).distinct
       .map(qid => CountResult(qid, got.getOrElse(qid, 0L))))
@@ -135,21 +122,13 @@ object Engine {
 
   /** Runs the batch on every shard of the serving layout in one job and
     * collects the (queryId, docId, score, matches) rows. */
-  private def shardResults(spark: SparkSession, index: BuiltIndex,
-                           queries: Seq[Query], op: String, k: Int,
+  private def shardResults(index: BuiltIndex, queries: Seq[Query],
+                           op: String, k: Int,
                            scorer: Scorer): Array[(Int, Long, Float, Long)] = {
-    val termInfo = resolveTerms(spark, index.dict, queries)
-    val resolved: Array[(Int, Array[(Int, Int, Long)], Boolean)] = queries.map { q =>
-      // query_freqs: termId-sorted (termId, qtf, df)
-      val qts = q.terms.flatMap(termInfo.get).groupBy(identity).toArray
-        .map { case ((tid, df), occurrences) => (tid, occurrences.length, df) }
-        .sortBy(_._1)
-      val unknown = q.terms.exists(t => !termInfo.contains(t))
-      (q.queryId, qts, unknown)
-    }.toArray
+    val batch = queries.toArray
     val meta = index.meta
     index.serving.flatMap { case (shard, (segs, norms)) =>
-      runShard(op, scorer, meta, k, resolved, segs, norms, shard)
+      runShard(op, scorer, meta, k, batch, segs, norms, shard)
     }.collect()
   }
 }

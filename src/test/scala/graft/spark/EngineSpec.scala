@@ -3,7 +3,7 @@ package graft.spark
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.build._
@@ -47,8 +47,9 @@ class EngineSpec extends AnyFunSuite {
   private val queries: Seq[Query] =
     queryTerms.zipWithIndex.map { case (t, i) => Query(i, t) }
 
-  private def buildIdx(indexType: String, shardSize: Long): BuiltIndex = {
-    val corpus = Corpus.fromDocumentsTable(spark, sfDir)
+  private def buildIdx(indexType: String, shardSize: Long,
+                       corpus: => Dataset[CorpusDoc] =
+                         Corpus.fromDocumentsTable(spark, sfDir)): BuiltIndex = {
     val docs = DocIds.assign(spark, corpus, partitions = 4)
     IndexBuilder.build(spark, docs, indexType, shardSize, buildPartitions = 4)
   }
@@ -140,7 +141,46 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("a repeated batch is one narrow pass: no shuffle, at most 2 jobs") {
+  test("per-shard term resolution: shard-local, cross-shard and unknown terms") {
+    // every term of the sf fixture occurs in every shard; a Zipf corpus
+    // has a rare tail whose terms each lie in one shard
+    val corpus = Corpus.synthetic(spark, 500, partitions = 4)
+    val zipf = BruteModel.fromTexts(corpus.collect().map(d =>
+      d.url.stripPrefix("https://example.org/doc/").toLong -> d.text))
+    val idx = buildIdx("block_optpfor", 64, corpus) // 8 shards at 500 docs
+    val shardLocal = zipf.postings.toSeq.sortBy(_._1).collect {
+      case (t, ps) if ps.length >= 2 && ps.map(_._1 / 64).distinct.length == 1 =>
+        t -> ps.head._1 / 64
+    }
+    val (t1, s1) = shardLocal.head
+    val t2 = shardLocal.collectFirst { case (t, s) if s != s1 => t }.get
+    val head = zipf.postings.maxBy(_._2.length)._1 // in every shard
+    val qs = Seq(Array(t1), Array(t1, t2), Array(t2, "nonexistentterm"),
+                 Array(t1, t1), Array(t1, head))
+      .zipWithIndex.map { case (t, i) => Query(i, t) }
+    assert(zipf.andCount(Array(t1, t2)) == 0L && zipf.orCount(Array(t1, t2)) > 0L)
+    for (op <- Engine.RankedOps.toSeq.sorted) {
+      val got = Engine.topK(spark, idx, qs, op, 10).collect().groupBy(_.queryId)
+      for (q <- qs) {
+        val expected =
+          if (op == "ranked_and") zipf.rankedAnd(q.terms, 10)
+          else zipf.rankedOr(q.terms, 10)
+        val hits = got.getOrElse(q.queryId, Array.empty).sortBy(_.rank)
+          .map(h => (h.docId, h.score)).toSeq
+        assert(hits == expected.toSeq, s"op=$op q=${q.terms.mkString(",")}")
+      }
+    }
+    val and = Engine.count(spark, idx, qs, "and").collect()
+      .map(c => c.queryId -> c.matches).toMap
+    val or = Engine.count(spark, idx, qs, "or").collect()
+      .map(c => c.queryId -> c.matches).toMap
+    for (q <- qs) {
+      assert(and(q.queryId) == zipf.andCount(q.terms), s"and ${q.terms.mkString(",")}")
+      assert(or(q.queryId) == zipf.orCount(q.terms), s"or ${q.terms.mkString(",")}")
+    }
+  }
+
+  test("a repeated batch is one narrow pass: no shuffle, exactly 1 job") {
     val idx = buildIdx("block_optpfor", 64) // ~8 shards at 500 docs
     // jobs and shuffle-write bytes that Spark ran for one call
     def traced(call: => Any): (Int, Long) = {
@@ -167,7 +207,7 @@ class EngineSpec extends AnyFunSuite {
                                "count" -> (() => assert(count() == counts)))) {
       val (jobs, shuffleBytes) = traced(repeat())
       assert(shuffleBytes == 0L, s"$name wrote $shuffleBytes shuffle bytes")
-      assert(jobs <= 2, s"$name ran $jobs jobs")
+      assert(jobs == 1, s"$name ran $jobs jobs")
     }
   }
 
@@ -266,8 +306,12 @@ final case class BruteModel(numDocs: Long,
 object BruteModel {
   def fromDocuments(spark: SparkSession, sfDir: String): BruteModel = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select($"doc_id", $"text").as[(Long, String)].collect()
+    fromTexts(spark.read.parquet(s"$sfDir/documents.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect())
+  }
+
+  /** Model of (docId, text) rows. */
+  def fromTexts(rows: Array[(Long, String)]): BruteModel = {
     val postings = scala.collection.mutable.Map.empty[String, List[(Long, Int)]]
     val docLens = scala.collection.mutable.Map.empty[Long, Int]
     for ((id, text) <- rows.sortBy(_._1)) {
