@@ -467,8 +467,8 @@ object SparkEntry {
         .toDF("probe", "mismatches").orderBy("probe")
     }
 
-    // SimHash blocking completeness: the 16-bit-segment pigeonhole must
-    // find EXACTLY the pairs a brute-force hamming<=3 scan finds
+    // SimHash blocking completeness: Manku's 6-block / choose-3 tables
+    // must find EXACTLY the pairs a brute-force hamming<=3 scan finds
     m += "dedup_simhash_complete" -> { (s, dir) =>
       import s.implicits._
       val d = documents(s, dir)
@@ -495,70 +495,45 @@ object SparkEntry {
     m += "ann_ivf_top5" -> ((s, dir) =>
       graft.ops.Ann.ivfTopK(s, embeddings(s, dir), (0L until 10L), k = 5))
 
-    // IVF invariants as zero-mismatch probes, mirroring ann_lsh_selfcheck:
-    // reported scores must equal the exact cosine of the same pair, and
-    // recall@5 vs the exact baseline must clear the floor (construction
-    // is bit-deterministic: hash-ordered seed sample + driver-local
-    // Lloyd with a fixed accumulation-chunk grid — no shuffle-order
-    // float nondeterminism in the trained centroids)
-    m += "ann_ivf_selfcheck" -> { (s, dir) =>
+    // ANN invariants as zero-mismatch probes over an approximate top-5
+    // of the first 10 vectors: reported scores must equal the exact
+    // cosine of the same pair, and recall@5 vs the exact baseline must
+    // clear a generous floor. Everything is seeded, so the recall at a
+    // gate SF is a fixed deterministic number (IVF training included:
+    // hash-ordered seed sample + driver-local Lloyd with a fixed
+    // accumulation-chunk grid — no shuffle-order float nondeterminism
+    // in the trained centroids)
+    def annSelfcheck(s: SparkSession, emb: DataFrame,
+                     approx: DataFrame): DataFrame = {
       import s.implicits._
-      val emb = embeddings(s, dir)
-      val ivf = graft.ops.Ann.ivfTopK(s, emb, (0L until 10L), k = 5)
+      import graft.ops.Ann
+      val ann = approx
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exact = graft.ops.Ann.cosineTopK(s, emb, (0L until 10L), k = 5)
+      val exact = Ann.cosineTopK(s, emb, (0L until 10L), k = 5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val q = emb.select($"vec_id".as("query_id"), $"embedding".as("qv"),
-                         graft.ops.Ann.norm($"embedding").as("qn"))
-      val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("nv"),
-                         graft.ops.Ann.norm($"embedding").as("nn"))
-      val recomputed = ivf.select($"query_id", $"neighbor_id", $"cos_q")
-        .join(q, "query_id").join(n, "neighbor_id")
-        .withColumn("cos_q2",
-          floor(graft.ops.Ann.dot($"qv", $"nv") / ($"qn" * $"nn") * 1000)
-            .cast("long"))
-      val badCos = recomputed.filter($"cos_q" =!= $"cos_q2").count()
-      val hits = ivf.select($"query_id", $"neighbor_id")
+      val badCos = Ann.rescore(
+          ann.select($"query_id", $"neighbor_id", $"cos_q"), emb,
+          Ann.Query, Ann.Neighbor, out = "cos_q2")
+        .filter($"cos_q" =!= $"cos_q2").count()
+      val hits = ann.select($"query_id", $"neighbor_id")
         .join(exact.select($"query_id", $"neighbor_id"),
               Seq("query_id", "neighbor_id"), "left_semi").count()
       val total = exact.count()
       val recall1000 = if (total == 0) 1000L else hits * 1000L / total
-      ivf.unpersist(); exact.unpersist()
+      ann.unpersist(); exact.unpersist()
       Seq(("cos_q_consistent", badCos),
           ("recall_at5_ge_600", if (recall1000 >= 600L) 0L else 1L))
         .toDF("probe", "mismatches").orderBy("probe")
     }
 
-    // LSH invariants as zero-mismatch probes (everything is seeded, so
-    // the recall at a gate SF is a fixed deterministic number):
-    // reported scores must equal the exact cosine of the same pair, and
-    // recall@5 vs the exact baseline must clear a generous floor
-    m += "ann_lsh_selfcheck" -> { (s, dir) =>
-      import s.implicits._
+    m += "ann_ivf_selfcheck" -> { (s, dir) =>
       val emb = embeddings(s, dir)
-      val lsh = graft.ops.Ann.lshTopK(s, emb, (0L until 10L), k = 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exact = graft.ops.Ann.cosineTopK(s, emb, (0L until 10L), k = 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val q = emb.select($"vec_id".as("query_id"), $"embedding".as("qv"),
-                         graft.ops.Ann.norm($"embedding").as("qn"))
-      val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("nv"),
-                         graft.ops.Ann.norm($"embedding").as("nn"))
-      val recomputed = lsh.select($"query_id", $"neighbor_id", $"cos_q")
-        .join(q, "query_id").join(n, "neighbor_id")
-        .withColumn("cos_q2",
-          floor(graft.ops.Ann.dot($"qv", $"nv") / ($"qn" * $"nn") * 1000)
-            .cast("long"))
-      val badCos = recomputed.filter($"cos_q" =!= $"cos_q2").count()
-      val hits = lsh.select($"query_id", $"neighbor_id")
-        .join(exact.select($"query_id", $"neighbor_id"),
-              Seq("query_id", "neighbor_id"), "left_semi").count()
-      val total = exact.count()
-      val recall1000 = if (total == 0) 1000L else hits * 1000L / total
-      lsh.unpersist(); exact.unpersist()
-      Seq(("cos_q_consistent", badCos),
-          ("recall_at5_ge_600", if (recall1000 >= 600L) 0L else 1L))
-        .toDF("probe", "mismatches").orderBy("probe")
+      annSelfcheck(s, emb, graft.ops.Ann.ivfTopK(s, emb, (0L until 10L), k = 5))
+    }
+
+    m += "ann_lsh_selfcheck" -> { (s, dir) =>
+      val emb = embeddings(s, dir)
+      annSelfcheck(s, emb, graft.ops.Ann.lshTopK(s, emb, (0L until 10L), k = 5))
     }
 
     // embedding-cosine near-dup: exact O(N^2) baseline (DuckDB-gated),

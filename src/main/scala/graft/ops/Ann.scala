@@ -1,13 +1,18 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.ingest.Scan
 
 /** Approximate-nearest-neighbor search over an embedding column
-  * (Array[Float]). Baseline: exact brute-force cosine top-k expressed
-  * with codegen'd array functions (zip_with + aggregate — no UDF in the
-  * hot path). Scale path: random-hyperplane LSH bucketing, so candidate
-  * generation is a bucket join instead of a crossJoin. */
+  * (Array[Float]). Baseline: exact brute-force cosine top-k, scored by a
+  * compiled dot-product UDF (`dot`). Scale paths: random-hyperplane LSH
+  * bucketing and IVF-Flat inverted lists, so candidate generation is a
+  * join instead of a crossJoin; every path re-ranks its candidates by
+  * the same exact score. */
 object Ann {
 
   /** Double-precision dot product of two float-array columns.
@@ -39,50 +44,67 @@ object Ann {
 
   def dot(a: Column, b: Column): Column = dotUdf(a, b)
 
-  /** Spread a small embeddings scan across the session's parallelism
-    * before a compute-dense operator. A gate-sized embeddings table is
-    * one parquet file = ONE scan partition, which serialized the whole
-    * all-pairs loop (the BroadcastNestedLoopJoin stream side measured
-    * 2.4 s on a single task at sf0.1) and the LSH/IVF signature maps.
-    * Real multi-split corpora already plan enough partitions and skip
-    * the exchange. */
-  private def spreadVecs(spark: SparkSession, df: DataFrame): DataFrame = {
-    val par = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.min(par, 16))
-      df.repartition(par, col("vec_id"))
-    else df
-  }
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Exact cosine top-k neighbors for the query vectors (vec_id in
-    * queryIds), quantized to floor(cos*1000) for engine-independent
-    * ranking; tie-break by neighbor id. */
-  def cosineTopK(spark: SparkSession, embeddings: DataFrame,
-                 queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    // norms once per VECTOR (O(N*d)), not per pair (O(pairs*d)); the
-    // tiny query side broadcasts so the scan streams map-side
-    val q = broadcast(embeddings.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-              norm(col("embedding")).as("qn")))
-    val joined = q.crossJoin(
-        spreadVecs(spark, embeddings)
-          .select(col("vec_id").as("neighbor_id"),
-                  col("embedding").as("nv"),
-                  norm(col("embedding")).as("nn")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-      .withColumn("cos_q", floor(col("cos") * 1000).cast("long"))
-    import org.apache.spark.sql.expressions.Window
+  /** Column names of one side of a scored pair: id, vector, norm. */
+  private[graft] final case class Side(id: String, vec: String, nrm: String) {
+    /** (id, vector, norm) per row of `embeddings`: norms once per
+      * VECTOR (O(N*d)), not per pair (O(pairs*d)). */
+    def of(embeddings: DataFrame): DataFrame =
+      embeddings.select(col("vec_id").as(id), col("embedding").as(vec),
+                        norm(col("embedding")).as(nrm))
+  }
+  private[graft] val Query = Side("query_id", "qv", "qn")
+  private[graft] val Neighbor = Side("neighbor_id", "nv", "nn")
+  private val PairA = Side("vec_a", "va", "na")
+  private val PairB = Side("vec_b", "vb", "nb")
+
+  /** The one exact score: floor(cos * 1000) of a pair of sides,
+    * evaluated as dot / (na * nb) * 1000 in that order. */
+  private def cosQ(a: Side, b: Side): Column =
+    floor(dot(col(a.vec), col(b.vec)) / (col(a.nrm) * col(b.nrm)) * 1000)
+      .cast("long")
+
+  /** Exact re-rank: joins each candidate (a.id, b.id) pair to both
+    * sides' vectors and norms and adds their score as `out`. */
+  private[graft] def rescore(cand: DataFrame, embeddings: DataFrame,
+                             a: Side, b: Side,
+                             out: String = "cos_q"): DataFrame =
+    cand.join(a.of(embeddings), a.id).join(b.of(embeddings), b.id)
+      .withColumn(out, cosQ(a, b))
+
+  /** The k best neighbors per query by (cos_q desc, neighbor_id asc):
+    * (query_id, rank, neighbor_id, cos_q) ordered by (query_id, rank). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-    joined.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id").cast("long").as("query_id"),
               col("rank").cast("long").as("rank"),
               col("neighbor_id").cast("long").as("neighbor_id"),
               col("cos_q"))
       .orderBy("query_id", "rank")
+  }
+
+  /** Scored (vec_a, vec_b) pairs with cos_q >= minCosQ, ordered. */
+  private def pairsAtLeast(scored: DataFrame, minCosQ: Long): DataFrame =
+    scored.filter(col("cos_q") >= minCosQ)
+      .select(col("vec_a").cast("long").as("vec_a"),
+              col("vec_b").cast("long").as("vec_b"), col("cos_q"))
+      .orderBy("vec_a", "vec_b")
+
+  /** Exact cosine top-k neighbors for the query vectors (vec_id in
+    * queryIds), quantized to floor(cos*1000) for engine-independent
+    * ranking; tie-break by neighbor id. */
+  def cosineTopK(spark: SparkSession, embeddings: DataFrame,
+                 queryIds: Seq[Long], k: Int = 10): DataFrame = {
+    // the tiny query side broadcasts so the scan streams map-side
+    val q = broadcast(
+      Query.of(embeddings.filter(col("vec_id").isin(queryIds: _*))))
+    topK(q.crossJoin(Neighbor.of(Scan.spread(spark, embeddings, "vec_id")))
+           .filter(col("query_id") =!= col("neighbor_id"))
+           .withColumn("cos_q", cosQ(Query, Neighbor)), k)
   }
 
   /** Embedding-cosine near-duplicate pairs, exact baseline: every
@@ -93,22 +115,10 @@ object Ann {
                   minCosQ: Long): DataFrame = {
     // the left side streams through the nested-loop join (the right is
     // broadcast); spread it so the O(N^2) condition evaluation runs wide
-    val a = spreadVecs(spark, embeddings)
-      .select(col("vec_id").as("vec_a"),
-              col("embedding").as("va"),
-              norm(col("embedding")).as("na"))
-    val b = embeddings.select(col("vec_id").as("vec_b"),
-                              col("embedding").as("vb"),
-                              norm(col("embedding")).as("nb"))
-    a.crossJoin(b)
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos_q",
-        floor(dot(col("va"), col("vb")) / (col("na") * col("nb")) * 1000)
-          .cast("long"))
-      .filter(col("cos_q") >= minCosQ)
-      .select(col("vec_a").cast("long").as("vec_a"),
-              col("vec_b").cast("long").as("vec_b"), col("cos_q"))
-      .orderBy("vec_a", "vec_b")
+    pairsAtLeast(PairA.of(Scan.spread(spark, embeddings, "vec_id"))
+                   .crossJoin(PairB.of(embeddings))
+                   .filter(col("vec_a") < col("vec_b"))
+                   .withColumn("cos_q", cosQ(PairA, PairB)), minCosQ)
   }
 
   /** Embedding-cosine near-dup, scale path: multi-table hyperplane
@@ -122,20 +132,10 @@ object Ann {
                      minCosQ: Long, numPlanes: Int = 0,
                      numTables: Int = 24, seed: Long = 42L,
                      maxBucket: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val planeCount =
-      if (numPlanes > 0) numPlanes
-      else defaultNumPlanes(embeddings.count())
-    val dim = embeddings.select(size(col("embedding"))).first().getInt(0)
-    val tables = spark.sparkContext.broadcast(
-      Array.tabulate(numTables)(t => hyperplanes(planeCount, dim, seed + t)))
-    val sigs = spreadVecs(spark, embeddings)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        tables.value.indices.map(t => (t, signature(v, tables.value(t)), id))
-      }.toDF("table", "bucket", "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (tables, buckets) =
+      hyperplaneLsh(spark, embeddings, numPlanes, numTables, seed)
+    val sigs = buckets(Scan.spread(spark, embeddings, "vec_id"))
+      .persist(MEMORY_AND_DISK)
     val coldBuckets = sigs.groupBy("table", "bucket")
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz").between(2, maxBucket))
@@ -149,25 +149,36 @@ object Ann {
       .filter(col("vec_a") < col("vec_b"))
       .select("vec_a", "vec_b")
       .distinct()
-    val a = embeddings.select(col("vec_id").as("vec_a"),
-                              col("embedding").as("va"),
-                              norm(col("embedding")).as("na"))
-    val b = embeddings.select(col("vec_id").as("vec_b"),
-                              col("embedding").as("vb"),
-                              norm(col("embedding")).as("nb"))
-    val out = cand.join(a, "vec_a").join(b, "vec_b")
-      .withColumn("cos_q",
-        floor(dot(col("va"), col("vb")) / (col("na") * col("nb")) * 1000)
-          .cast("long"))
-      .filter(col("cos_q") >= minCosQ)
-      .select(col("vec_a").cast("long").as("vec_a"),
-              col("vec_b").cast("long").as("vec_b"), col("cos_q"))
-      .orderBy("vec_a", "vec_b")
-    val result = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val result = pairsAtLeast(rescore(cand, embeddings, PairA, PairB), minCosQ)
+      .persist(MEMORY_AND_DISK)
     result.count()
     sigs.unpersist()
     tables.unpersist(false) // frees executor copies; stays re-shippable
     result
+  }
+
+  /** Multi-table random-hyperplane LSH, shared by lshCosinePairs and
+    * lshTopK: `numTables` seeded hyperplane sets (plane count from the
+    * corpus size when numPlanes <= 0), broadcast once. Returns the
+    * broadcast and the signer that maps a (vec_id, embedding) frame to
+    * one (table, bucket, vec_id) row per vector per table. */
+  private def hyperplaneLsh(spark: SparkSession, embeddings: DataFrame,
+                            numPlanes: Int, numTables: Int, seed: Long)
+      : (Broadcast[Array[Array[Array[Double]]]], DataFrame => DataFrame) = {
+    import spark.implicits._
+    val planeCount =
+      if (numPlanes > 0) numPlanes
+      else defaultNumPlanes(embeddings.count())
+    val dim = embeddings.select(size(col("embedding"))).first().getInt(0)
+    val tables = spark.sparkContext.broadcast(
+      Array.tabulate(numTables)(t => hyperplanes(planeCount, dim, seed + t)))
+    val buckets = (vecs: DataFrame) =>
+      vecs.select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .flatMap { case (id, v) =>
+          tables.value.indices.map(t => (t, signature(v, tables.value(t)), id))
+        }.toDF("table", "bucket", "vec_id")
+    (tables, buckets)
   }
 
   /** Deterministic random hyperplanes (Gaussian, seeded). */
@@ -400,14 +411,14 @@ object Ann {
     val lists = if (nlist > 0) nlist else defaultNlist(embeddings.count())
     val trained = trainIvfCentroids(spark, embeddings, lists)
     val cents = spark.sparkContext.broadcast((trained, centroidNorms(trained)))
-    val assigned = spreadVecs(spark, embeddings)
+    val assigned = Scan.spread(spark, embeddings, "vec_id")
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .map { case (id, v) =>
         (nearestCentroid(v, cents.value._1, cents.value._2), id)
       }
       .toDF("cluster", "neighbor_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     assigned.count() // materialize: queries must never re-run the O(N) pass
     new IvfIndex(lists, cents, assigned)
   }
@@ -431,30 +442,14 @@ object Ann {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .distinct()
-    val q = embeddings.select(col("vec_id").as("query_id"),
-                              col("embedding").as("qv"),
-                              norm(col("embedding")).as("qn"))
-    val n = embeddings.select(col("vec_id").as("neighbor_id"),
-                              col("embedding").as("nv"),
-                              norm(col("embedding")).as("nn"))
-    val scored = cand.join(q, "query_id").join(n, "neighbor_id")
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-      .withColumn("cos_q", floor(col("cos") * 1000).cast("long"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-    val out = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id").cast("long"), col("rank").cast("long"),
-              col("neighbor_id").cast("long"), col("cos_q"))
-      .orderBy("query_id", "rank")
     // Materialize the (Q·k)-row result before returning: the centroid
     // broadcast and inverted lists belong to the IvfIndex, whose
     // release() (called by ivfTopK, or by the session owner when done
     // querying) frees executor copies without poisoning this frame's
     // lineage. Callers may unpersist the returned frame when done (the
     // gates do).
-    val res = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val res = topK(rescore(cand, embeddings, Query, Neighbor), k)
+      .persist(MEMORY_AND_DISK)
     res.count()
     res
   }
@@ -463,46 +458,26 @@ object Ann {
     * candidates = same bucket in any table; ranked by exact cosine.
     * numPlanes <= 0 derives the plane count from the corpus size
     * (defaultNumPlanes). Recall/approximation verified against
-    * cosineTopK in ScalaTest and the ann_lsh_selfcheck driver gate. */
+    * cosineTopK in ScalaTest and the ann_lsh_selfcheck gate.
+    * The query side signs only the query vectors, so the corpus
+    * signatures have one consumer and need no cache: the result stays
+    * lazy and holds nothing the caller must release. */
   def lshTopK(spark: SparkSession, embeddings: DataFrame,
               queryIds: Seq[Long], k: Int = 10, numPlanes: Int = 0,
               numTables: Int = 24, seed: Long = 42L): DataFrame = {
-    import spark.implicits._
-    val planeCount =
-      if (numPlanes > 0) numPlanes
-      else defaultNumPlanes(embeddings.count())
-    val dim = embeddings.select(size(col("embedding"))).first().getInt(0)
-    val tables = spark.sparkContext.broadcast(
-      Array.tabulate(numTables)(t => hyperplanes(planeCount, dim, seed + t)))
-    val sigs = spreadVecs(spark, embeddings)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        tables.value.indices.map(t => (t, signature(v, tables.value(t)), id))
-      }.toDF("table", "bucket", "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val qs = sigs.filter(col("vec_id").isin(queryIds: _*))
+    val (_, buckets) =
+      hyperplaneLsh(spark, embeddings, numPlanes, numTables, seed)
+    // the query filter is restated above the signer: Catalyst cannot
+    // see through the flatMap, and needs it to prune the re-rank's
+    // query side to these ids
+    val isQuery = col("vec_id").isin(queryIds: _*)
+    val qs = buckets(embeddings.filter(isQuery)).filter(isQuery)
       .withColumnRenamed("vec_id", "query_id")
+    val sigs = buckets(Scan.spread(spark, embeddings, "vec_id"))
     val cand = qs.join(sigs, Seq("table", "bucket"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
       .distinct()
-    val q = embeddings.select(col("vec_id").as("query_id"),
-                              col("embedding").as("qv"),
-                              norm(col("embedding")).as("qn"))
-    val n = embeddings.select(col("vec_id").as("neighbor_id"),
-                              col("embedding").as("nv"),
-                              norm(col("embedding")).as("nn"))
-    val scored = cand.join(q, "query_id").join(n, "neighbor_id")
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-      .withColumn("cos_q", floor(col("cos") * 1000).cast("long"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id").cast("long"), col("rank").cast("long"),
-              col("neighbor_id").cast("long"), col("cos_q"))
-      .orderBy("query_id", "rank")
+    topK(rescore(cand, embeddings, Query, Neighbor), k)
   }
 }

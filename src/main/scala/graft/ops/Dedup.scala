@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.ingest.Tokenize
 
 /** Web-corpus deduplication operators: exact (hash groupBy), n-gram
@@ -32,7 +33,7 @@ object Dedup {
     * most common web-duplication shape) costs one hash groupBy instead
     * of flooding a blocking bucket with M entries and M^2/2 candidate
     * pairs. */
-  def collapseExact(docs: DataFrame): (DataFrame, DataFrame) = {
+  private def collapseExact(docs: DataFrame): (DataFrame, DataFrame) = {
     val keyed = docs.select(col("doc_id"), col("text"),
                             md5(col("text")).as("h"))
     val reps = keyed.groupBy("h")
@@ -56,6 +57,55 @@ object Dedup {
     * defaultParallelism, not a constant. */
   private def spread(spark: SparkSession, df: DataFrame): DataFrame =
     df.repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+
+  /** A near-dup op's part of [[expandExact]]: its pairs among
+    * representatives (doc_a < doc_b, then value columns); the
+    * representatives that get intra pairs, as rep_id plus the columns
+    * `intraValues` reads (None: every duplicate group); and the op's
+    * caches to release. */
+  private final case class RepPairs(pairs: DataFrame,
+                                    intraReps: Option[DataFrame],
+                                    intraValues: Seq[Column],
+                                    caches: Seq[DataFrame] = Nil)
+
+  /** The steps every near-dup op shares: collapse exact duplicates, let
+    * `op` pair up the spread (doc_id, text) representatives, expand each
+    * representative pair to its member pairs (identical texts share
+    * shingle sets, signatures and simhashes, so values carry over) and
+    * add the intra-group pairs of exact copies. An M-copy cluster is
+    * inherently M^2/2 output rows; exactGroups gives it linearly. The
+    * small result is materialized so that membership and the op's
+    * caches are released here, not leaked into the caller's session. */
+  private def expandExact(spark: SparkSession, docs: DataFrame)
+                         (op: DataFrame => RepPairs): DataFrame = {
+    val (repDocs, membership0) = collapseExact(docs)
+    val membership = membership0.persist(MEMORY_AND_DISK)
+    val rep = op(spread(spark, repDocs))
+    val values = rep.pairs.columns.toSeq.diff(Seq("doc_a", "doc_b")).map(col)
+    val cross = rep.pairs
+      .join(membership.select(col("rep_id").as("doc_a"),
+                              col("doc_id").as("ma")), "doc_a")
+      .join(membership.select(col("rep_id").as("doc_b"),
+                              col("doc_id").as("mb")), "doc_b")
+      .select(least(col("ma"), col("mb")).as("doc_a") +:
+              greatest(col("ma"), col("mb")).as("doc_b") +: values: _*)
+    val groups = membership.filter(col("members") >= 2)
+    val dupGroups = rep.intraReps.fold(groups)(groups.join(_, "rep_id"))
+    val carried = rep.intraReps.toSeq
+      .flatMap(_.columns.filter(_ != "rep_id")).map(col)
+    val intra = dupGroups
+      .select(col("rep_id") +: col("doc_id").as("ma") +: carried: _*)
+      .join(dupGroups.select(col("rep_id"), col("doc_id").as("mb")), "rep_id")
+      .filter(col("ma") < col("mb"))
+      .select(col("ma").as("doc_a") +: col("mb").as("doc_b") +:
+              rep.intraValues: _*)
+    val result = cross.unionByName(intra).orderBy("doc_a", "doc_b")
+      .persist(MEMORY_AND_DISK)
+    result.count()
+    rep.caches.foreach(_.unpersist())
+    membership.unpersist()
+    result
+  }
 
   /** Token k-shingles of a document, distinct. Documents with fewer than
     * k tokens have NO shingles (matches the oracle's n-gram definition,
@@ -97,101 +147,75 @@ object Dedup {
   def ngramJaccardPairs(spark: SparkSession, docs: DataFrame, k: Int = 3,
                         threshold: Double = 0.5,
                         maxShingleDf: Int = 200,
-                        minCoOccur: Int = 2): DataFrame = {
-    import spark.implicits._
-    val (repDocs, membership0) = collapseExact(docs)
-    val membership = membership0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // One cached row per distinct text holding its (already-distinct)
-    // shingle ARRAY — not the exploded (doc_id, shingle) relation. The
-    // posting view below re-derives rows with a codegen'd explode per
-    // consumer; the cache is corpus-of-arrays sized (rows = distinct
-    // texts), and the per-doc set needed by the verify phase is the
-    // cached array itself, which deletes the collect_set re-aggregation
-    // of every posting row the old shape paid (its widest shuffle).
-    val shArr = spread(spark, repDocs.select(col("doc_id"), col("text")))
-      .as[(Long, String)]
-      .map { case (id, text) => (id, shingles(text, k)) }
-      .toDF("doc_id", "ss")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sh = shArr.select(col("doc_id"), explode(col("ss")).as("shingle"))
-    // df FIRST (a streaming partial-aggregated count), hot shingles
-    // dropped before any posting list is collected: the join and the
-    // groupBy below hash-partition on the same key, and every collected
-    // bucket is <= maxShingleDf elements by construction
-    val cold = sh.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxShingleDf))
-      .select("shingle")
-    val cand = sh.join(cold, "shingle")
-      .groupBy("shingle")
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .select(col("ds")).as[Array[Long]]
-      .flatMap { ds =>
-        val s = ds.sorted
-        for {
-          i <- s.indices.iterator
-          j <- (i + 1) until s.length
-        } yield (s(i), s(j))
-      }
-      .toDF("doc_a", "doc_b")
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("co"))
-      .filter(col("co") >= minCoOccur)
-      .select("doc_a", "doc_b")
-    // per-doc shingle sets, straight from the cache: shingles() output
-    // is distinct by construction, and the only consumers take
-    // size(array_intersect(...)) — order-insensitive — so this equals
-    // the old collect_set aggregate row for row. Docs with zero
-    // shingles carry an empty array here where the old groupBy had no
-    // row; every consumer either inner-joins on candidate docs (which
-    // have >= minCoOccur shingles) or filters sz >= 1, so those rows
-    // are unreachable either way.
-    val sets = shArr.select(col("doc_id"), col("ss"),
-                            size(col("ss")).cast("long").as("sz"))
-    val repPairs = cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("ss").as("ss_a"),
-                        col("sz").as("sz_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("ss").as("ss_b"),
-                        col("sz").as("sz_b")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("ss_a"), col("ss_b"))).cast("long"))
-      .withColumn("uni", col("sz_a") + col("sz_b") - col("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni").cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "inter", "uni", "jaccard")
-    // expand representative pairs to member pairs (identical texts have
-    // identical shingle sets, so inter/uni/jaccard carry over), and add
-    // the intra-group pairs (jaccard exactly 1) for groups of >= 2
-    // exact copies with at least one shingle. The pair OUTPUT of an
-    // M-copy cluster is inherently M^2/2 rows — callers wanting linear
-    // output use exactGroups for those clusters.
-    val cross = repPairs
-      .join(membership.select(col("rep_id").as("doc_a"),
-                              col("doc_id").as("ma")), "doc_a")
-      .join(membership.select(col("rep_id").as("doc_b"),
-                              col("doc_id").as("mb")), "doc_b")
-      .select(least(col("ma"), col("mb")).as("doc_a"),
-              greatest(col("ma"), col("mb")).as("doc_b"),
-              col("inter"), col("uni"), col("jaccard"))
-    val dupGroups = membership.filter(col("members") >= 2)
-      .join(sets.filter(col("sz") >= 1)
-              .select(col("doc_id").as("rep_id"), col("sz")), "rep_id")
-    val intra = dupGroups.select(col("rep_id"), col("doc_id").as("ma"), col("sz"))
-      .join(dupGroups.select(col("rep_id"), col("doc_id").as("mb")), "rep_id")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
-              col("sz").as("inter"), col("sz").as("uni"),
-              (col("sz").cast("double") / col("sz").cast("double")).as("jaccard"))
-    val out = cross.unionByName(intra).orderBy("doc_a", "doc_b")
-    // sh and membership feed multiple consumers; materialize the small
-    // pair output eagerly so the big caches can be released here
-    // instead of leaking into the caller's session
-    val result = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    shArr.unpersist()
-    membership.unpersist()
-    result
-  }
+                        minCoOccur: Int = 2): DataFrame =
+    expandExact(spark, docs) { repDocs =>
+      import spark.implicits._
+      // One cached row per distinct text holding its (already-distinct)
+      // shingle ARRAY — not the exploded (doc_id, shingle) relation. The
+      // posting view below re-derives rows with a codegen'd explode per
+      // consumer; the cache is corpus-of-arrays sized (rows = distinct
+      // texts), and the per-doc set needed by the verify phase is the
+      // cached array itself, which deletes the collect_set re-aggregation
+      // of every posting row the old shape paid (its widest shuffle).
+      val shArr = repDocs.as[(Long, String)]
+        .map { case (id, text) => (id, shingles(text, k)) }
+        .toDF("doc_id", "ss")
+        .persist(MEMORY_AND_DISK)
+      val sh = shArr.select(col("doc_id"), explode(col("ss")).as("shingle"))
+      // df FIRST (a streaming partial-aggregated count), hot shingles
+      // dropped before any posting list is collected: the join and the
+      // groupBy below hash-partition on the same key, and every collected
+      // bucket is <= maxShingleDf elements by construction
+      val cold = sh.groupBy("shingle")
+        .agg(count(lit(1)).as("df"))
+        .filter(col("df").between(2, maxShingleDf))
+        .select("shingle")
+      val cand = sh.join(cold, "shingle")
+        .groupBy("shingle")
+        .agg(collect_list(col("doc_id")).as("ds"))
+        .select(col("ds")).as[Array[Long]]
+        .flatMap { ds =>
+          val s = ds.sorted
+          for {
+            i <- s.indices.iterator
+            j <- (i + 1) until s.length
+          } yield (s(i), s(j))
+        }
+        .toDF("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b")
+        .agg(count(lit(1)).as("co"))
+        .filter(col("co") >= minCoOccur)
+        .select("doc_a", "doc_b")
+      // per-doc shingle sets, straight from the cache: shingles() output
+      // is distinct by construction, and the only consumers take
+      // size(array_intersect(...)) — order-insensitive — so this equals
+      // the old collect_set aggregate row for row. Docs with zero
+      // shingles carry an empty array here where the old groupBy had no
+      // row; every consumer either inner-joins on candidate docs (which
+      // have >= minCoOccur shingles) or filters sz >= 1, so those rows
+      // are unreachable either way.
+      val sets = shArr.select(col("doc_id"), col("ss"),
+                              size(col("ss")).cast("long").as("sz"))
+      val repPairs = cand
+        .join(sets.select(col("doc_id").as("doc_a"), col("ss").as("ss_a"),
+                          col("sz").as("sz_a")), "doc_a")
+        .join(sets.select(col("doc_id").as("doc_b"), col("ss").as("ss_b"),
+                          col("sz").as("sz_b")), "doc_b")
+        .withColumn("inter", size(array_intersect(col("ss_a"), col("ss_b"))).cast("long"))
+        .withColumn("uni", col("sz_a") + col("sz_b") - col("inter"))
+        .withColumn("jaccard", col("inter").cast("double") / col("uni").cast("double"))
+        .filter(col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "inter", "uni", "jaccard")
+      // intra-group pairs (jaccard exactly 1) for exact copies with at
+      // least one shingle
+      RepPairs(repPairs,
+               Some(sets.filter(col("sz") >= 1)
+                      .select(col("doc_id").as("rep_id"), col("sz"))),
+               Seq(col("sz").as("inter"), col("sz").as("uni"),
+                   (col("sz").cast("double") / col("sz").cast("double"))
+                     .as("jaccard")),
+               Seq(shArr))
+    }
 
   // ---------------------------------------------------------------- MinHash
 
@@ -269,81 +293,59 @@ object Dedup {
   def minhashLsh(spark: SparkSession, docs: DataFrame, k: Int = 3,
                  numPerms: Int = 128, rowsPerBand: Int = 4,
                  threshold: Double = 0.8, seed: Long = 42L,
-                 maxBucket: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val ps = spark.sparkContext.broadcast(perms(numPerms, seed))
-    val (repDocs, membership0) = collapseExact(docs)
-    val membership = membership0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // docs with no shingles have no MinHash signature (an all-MaxValue
-    // sentinel signature would bucket every short doc together)
-    val sigs = spread(spark, repDocs.select(col("doc_id"), col("text")))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val fps = shingles(text, k).map(fp64)
-        if (fps.isEmpty) None
-        else Some((id, minhashSignature(fps, ps.value)))
-      }.toDF("doc_id", "sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = numPerms / rowsPerBand
-    val banded = sigs.as[(Long, Array[Long])].flatMap { case (id, sig) =>
-      (0 until bands).map { b =>
-        val slice = sig.slice(b * rowsPerBand, (b + 1) * rowsPerBand)
-        (b, slice.mkString(","), id)
-      }
-    }.toDF("band", "bucket", "doc_id")
-    // bucket sizes first (streaming count), oversized buckets dropped
-    // before the self-join materializes their pairs
-    val coldBuckets = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz").between(2, maxBucket))
-      .select("band", "bucket")
-    val coldBanded = banded.join(coldBuckets, Seq("band", "bucket"))
-    val l = coldBanded.as("l")
-    val r = coldBanded.as("r")
-    val cand = l.join(r, col("l.band") === col("r.band") &&
-                         col("l.bucket") === col("r.bucket") &&
-                         col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-      .distinct()
-    // estimate similarity from full signatures
-    val sa = sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a")
-    val sb = sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b")
-    val repPairs = cand.join(sa, "doc_a").join(sb, "doc_b")
-      .as[(Long, Long, Array[Long], Array[Long])]
-      .map { case (b, a, sb2, sa2) =>
-        var eq = 0
-        var i = 0
-        while (i < sa2.length) { if (sa2(i) == sb2(i)) eq += 1; i += 1 }
-        (a, b, eq.toDouble / sa2.length)
-      }.toDF("doc_a", "doc_b", "est_jaccard")
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"),
-              floor(col("est_jaccard") * 1000).cast("long").as("est_jaccard_x1000"))
-    // expand representative pairs to member pairs; intra-group pairs of
-    // exact copies (with a signature, i.e. >= 1 shingle) estimate 1.0
-    val cross = repPairs
-      .join(membership.select(col("rep_id").as("doc_a"),
-                              col("doc_id").as("ma")), "doc_a")
-      .join(membership.select(col("rep_id").as("doc_b"),
-                              col("doc_id").as("mb")), "doc_b")
-      .select(least(col("ma"), col("mb")).as("doc_a"),
-              greatest(col("ma"), col("mb")).as("doc_b"),
-              col("est_jaccard_x1000"))
-    val dupGroups = membership.filter(col("members") >= 2)
-      .join(sigs.select(col("doc_id").as("rep_id")), "rep_id")
-    val intra = dupGroups.select(col("rep_id"), col("doc_id").as("ma"))
-      .join(dupGroups.select(col("rep_id"), col("doc_id").as("mb")), "rep_id")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
-              lit(1000L).as("est_jaccard_x1000"))
-    val out = cross.unionByName(intra).orderBy("doc_a", "doc_b")
-    val result = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    sigs.unpersist()
-    membership.unpersist()
-    result
-  }
+                 maxBucket: Int = 1000): DataFrame =
+    expandExact(spark, docs) { repDocs =>
+      import spark.implicits._
+      val ps = spark.sparkContext.broadcast(perms(numPerms, seed))
+      // docs with no shingles have no MinHash signature (an all-MaxValue
+      // sentinel signature would bucket every short doc together)
+      val sigs = repDocs.as[(Long, String)]
+        .flatMap { case (id, text) =>
+          val fps = shingles(text, k).map(fp64)
+          if (fps.isEmpty) None
+          else Some((id, minhashSignature(fps, ps.value)))
+        }.toDF("doc_id", "sig")
+        .persist(MEMORY_AND_DISK)
+      val bands = numPerms / rowsPerBand
+      val banded = sigs.as[(Long, Array[Long])].flatMap { case (id, sig) =>
+        (0 until bands).map { b =>
+          val slice = sig.slice(b * rowsPerBand, (b + 1) * rowsPerBand)
+          (b, slice.mkString(","), id)
+        }
+      }.toDF("band", "bucket", "doc_id")
+      // bucket sizes first (streaming count), oversized buckets dropped
+      // before the self-join materializes their pairs
+      val coldBuckets = banded.groupBy("band", "bucket")
+        .agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz").between(2, maxBucket))
+        .select("band", "bucket")
+      val coldBanded = banded.join(coldBuckets, Seq("band", "bucket"))
+      val l = coldBanded.as("l")
+      val r = coldBanded.as("r")
+      val cand = l.join(r, col("l.band") === col("r.band") &&
+                           col("l.bucket") === col("r.bucket") &&
+                           col("l.doc_id") < col("r.doc_id"))
+        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+        .distinct()
+      // estimate similarity from full signatures
+      val sa = sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a")
+      val sb = sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b")
+      val repPairs = cand.join(sa, "doc_a").join(sb, "doc_b")
+        .as[(Long, Long, Array[Long], Array[Long])]
+        .map { case (b, a, sb2, sa2) =>
+          var eq = 0
+          var i = 0
+          while (i < sa2.length) { if (sa2(i) == sb2(i)) eq += 1; i += 1 }
+          (a, b, eq.toDouble / sa2.length)
+        }.toDF("doc_a", "doc_b", "est_jaccard")
+        .filter(col("est_jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"),
+                floor(col("est_jaccard") * 1000).cast("long").as("est_jaccard_x1000"))
+      // intra-group pairs of exact copies with a signature (>= 1
+      // shingle) estimate 1.0
+      RepPairs(repPairs, Some(sigs.select(col("doc_id").as("rep_id"))),
+               Seq(lit(1000L).as("est_jaccard_x1000")), Seq(sigs))
+    }
 
   // ---------------------------------------------------------------- SimHash
 
@@ -404,45 +406,27 @@ object Dedup {
                    maxDist: Int = 3): DataFrame = {
     import spark.implicits._
     require(maxDist <= 3, "6-block/choose-3 tables cover maxDist <= 3")
-    val (repDocs, membership0) = collapseExact(docs)
-    val membership = membership0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hashed = spread(spark, repDocs.select(col("doc_id"), col("text")))
-      .as[(Long, String)]
-      .map { case (id, t) => (id, simhash(t)) }
-      .toDF("doc_id", "simhash")
-    val seg = hashed.as[(Long, Long)].flatMap { case (id, h) =>
-      simhashBlockKeys(h).map { case (t, key) => (t, key, id, h) }
-    }.toDF("tbl", "key", "doc_id", "simhash")
-    val l = seg.as("l")
-    val r = seg.as("r")
-    val repPairs = l.join(r, col("l.tbl") === col("r.tbl") &&
-                             col("l.key") === col("r.key") &&
-                             col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-              col("l.simhash").as("ha"), col("r.simhash").as("hb"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"),
-              col("hamming").cast("long").as("hamming"))
-    val cross = repPairs
-      .join(membership.select(col("rep_id").as("doc_a"),
-                              col("doc_id").as("ma")), "doc_a")
-      .join(membership.select(col("rep_id").as("doc_b"),
-                              col("doc_id").as("mb")), "doc_b")
-      .select(least(col("ma"), col("mb")).as("doc_a"),
-              greatest(col("ma"), col("mb")).as("doc_b"), col("hamming"))
-    val dupGroups = membership.filter(col("members") >= 2)
-    val intra = dupGroups.select(col("rep_id"), col("doc_id").as("ma"))
-      .join(dupGroups.select(col("rep_id"), col("doc_id").as("mb")), "rep_id")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
-              lit(0L).as("hamming"))
-    val out = cross.unionByName(intra).orderBy("doc_a", "doc_b")
-    val result = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    membership.unpersist()
-    result
+    expandExact(spark, docs) { repDocs =>
+      val hashed = repDocs.as[(Long, String)]
+        .map { case (id, t) => (id, simhash(t)) }
+        .toDF("doc_id", "simhash")
+      val seg = hashed.as[(Long, Long)].flatMap { case (id, h) =>
+        simhashBlockKeys(h).map { case (t, key) => (t, key, id, h) }
+      }.toDF("tbl", "key", "doc_id", "simhash")
+      val l = seg.as("l")
+      val r = seg.as("r")
+      val repPairs = l.join(r, col("l.tbl") === col("r.tbl") &&
+                               col("l.key") === col("r.key") &&
+                               col("l.doc_id") < col("r.doc_id"))
+        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
+                col("l.simhash").as("ha"), col("r.simhash").as("hb"))
+        .distinct()
+        .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
+        .filter(col("hamming") <= maxDist)
+        .select(col("doc_a"), col("doc_b"),
+                col("hamming").cast("long").as("hamming"))
+      // every duplicate group is at distance 0, no extra join needed
+      RepPairs(repPairs, None, Seq(lit(0L).as("hamming")))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ingest.Scan
 
 /** Pure-Catalyst oracles over the raw documents table — declarative
   * DataFrame plans (tokenize via SQL functions, BM25 as column
@@ -16,19 +17,11 @@ object Oracle {
   def tokens(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    // A gate-sized documents table is one parquet file = ONE scan
-    // partition, so the explode + partial-aggregate map side of every
-    // consumer ran single-threaded (measured 1.4 s of a 5.4 s gate).
-    // Spread small scans across the session's parallelism first; a real
-    // multi-split corpus already plans enough partitions and skips the
-    // shuffle (which at scale would pointlessly move the full text).
-    val par = spark.sparkContext.defaultParallelism
-    val src =
-      if (docs.rdd.getNumPartitions < math.min(par, 16))
-        docs.repartition(par, col("doc_id"))
-      else docs
-    src.select(col("doc_id"),
-               explode(split(lower(col("text")), "[^a-z0-9]+")).as("term"))
+    // the explode + partial aggregate below is the map side of every
+    // oracle consumer
+    Scan.spread(spark, docs, "doc_id")
+      .select(col("doc_id"),
+              explode(split(lower(col("text")), "[^a-z0-9]+")).as("term"))
       .filter(col("term") =!= "")
   }
 

@@ -17,8 +17,23 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * op code path. Each gate runs in a FRESH session so cross-gate caches
   * (SparkEntry.indexOf / Oracle.postings) don't mask the plan the bench
   * sees on first execution.
+  *
+  * Dumps diff cleanly across builds: per-run ids (expressions,
+  * `plan_id`, lambdas, and the codegen and query-stage ids AQE assigns
+  * in completion order) become `x`, runtime `Statistics(...)` are
+  * dropped, and action durations go to stdout. AQE choices that race
+  * on those statistics (which of two equal-sized join sides to
+  * broadcast) still vary, so compare against more than one run.
   */
 object ExplainDump {
+  /** The plan text with per-run ids and statistics replaced. */
+  private def normalized(plan: String): String =
+    plan.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+", "\\$Lambda\\$x")
+      .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : x]")
+      .replaceAll("(\\(\\d+\\) \\w*QueryStage\n(?:Output[^\n]*\n)?Arguments: )\\d+", "$1x")
+      .replaceAll(", Statistics\\([^)]*\\)", "")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -35,10 +50,10 @@ object ExplainDump {
         override def onSuccess(funcName: String, qe: QueryExecution,
                                durationNs: Long): Unit = synchronized {
           n += 1
-          plans.append(s"== action $n ($funcName, " +
-                       f"${durationNs / 1e9}%.2f s) ==\n")
-          plans.append(qe.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
+          println(f"EXPLAIN $name action $n ($funcName): ${durationNs / 1e9}%.2f s")
+          plans.append(s"== action $n ($funcName) ==\n")
+          plans.append(normalized(qe.explainString(
+            org.apache.spark.sql.execution.FormattedMode)))
           plans.append("\n")
         }
         override def onFailure(funcName: String, qe: QueryExecution,

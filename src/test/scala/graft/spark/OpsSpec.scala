@@ -266,6 +266,27 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.7, s"recall $recall (${lsh.size}/${exact.size})")
   }
 
+  test("dedup and ANN ops leave no cache behind but their own result") {
+    val qids = 0L until 10L
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(spark, documents)),
+      "minhashLsh" -> (() => Dedup.minhashLsh(spark, documents)),
+      "simhashPairs" -> (() => Dedup.simhashPairs(spark, documents)),
+      "cosinePairs" -> (() => Ann.cosinePairs(spark, embeddings, 300L)),
+      "lshCosinePairs" -> (() => Ann.lshCosinePairs(spark, embeddings, 300L)),
+      "cosineTopK" -> (() => Ann.cosineTopK(spark, embeddings, qids, 5)),
+      "lshTopK" -> (() => Ann.lshTopK(spark, embeddings, qids, 5)),
+      "ivfTopK" -> (() => Ann.ivfTopK(spark, embeddings, qids, 5)))
+    for ((name, op) <- ops) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = op()
+      assert(out.collect().nonEmpty, s"$name: empty on the fixture")
+      out.unpersist(blocking = true)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+             s"$name left a persisted relation in the session")
+    }
+  }
+
   test("text ops are deterministic and self-consistent") {
     val q = TextOps.quality(documents).collect()
     assert(q.length == documents.count())
